@@ -26,7 +26,7 @@ Env:
   SPARK_GRAFT_BENCH_FRESH       0 disables the fresh-JVM tier (default 1)
   SPARK_GRAFT_BENCH_FRESH_JVMS  JVMs per fresh median (default 3)
 
-Also measured: the pandas-UDF parser vs the column-expression parser (the
+Also measured: the Arrow parser vs the column-expression parser (the
 Spark analogue of the reference's split-vs-regex study,
 quake3-server-events/benches/parsing_strategies.rs), the extended exact
 fold, fan-out routing, and the generic engine queries.
@@ -288,7 +288,7 @@ def build_headline_groups(spark) -> tuple[dict[str, dict], dict]:
         return row
 
     def run_pipeline_bucketed():
-        out = summarize_matches(bucketed, ops={"kills"}, session_first=True)
+        out = summarize_matches(bucketed, ops={"kills"})
         return out.agg(
             F.count(F.lit(1)).alias("n_matches"),
             F.sum("total_kills").alias("kills"),
@@ -495,7 +495,7 @@ def main() -> None:
     head = meta["head_result"]
 
     # parser comparison (reference: split vs regex, 3200x — ours: JVM
-    # expressions vs Arrow pandas UDF).  Interleaved: the round-4 artifact
+    # expressions vs pyarrow kernels via mapInArrow).  Interleaved: the round-4 artifact
     # showed +40% on parse_arrow purely from sequential in-session drift.
     def run_parse(parser):
         def _f():
@@ -509,7 +509,6 @@ def main() -> None:
     bench_paired(
         {
             "parse_arrow": run_parse("arrow"),
-            "parse_pandas": run_parse("pandas"),
             "parse_expr": run_parse("expr"),
         }
     )

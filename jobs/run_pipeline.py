@@ -6,7 +6,7 @@
         --output <sink base path> \
         --checkpoint <checkpoint table path> \
         --ops kills,means_of_death,player_resolutions,reported_scores \
-        --run-id nightly-2024-06-01 [--resume] [--session-first]
+        --run-id nightly-2024-06-01 [--resume] [--pedantic] [--verbose]
 
 Runs parse -> sessionize -> route (five sinks) -> summaries with
 per-partition lineage/metrics committed to the checkpoint table; with
@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--ops", default="kills")
     ap.add_argument("--run-id", default=f"run-{int(time.time())}")
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--session-first", action="store_true")
     ap.add_argument("--n-units", type=int, default=64)
     ap.add_argument("--stop-on-violations", action="store_true")
     ap.add_argument(
@@ -134,7 +133,6 @@ def main() -> None:
                 transcripts, ops=ops,
                 stop_on_violations=args.stop_on_violations or args.pedantic,
                 stop_on_feed_errors=args.pedantic,
-                session_first=args.session_first,
             )
             summaries.write.mode("overwrite").parquet(
                 f"{args.output}/match_summaries"

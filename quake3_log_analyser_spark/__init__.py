@@ -7,8 +7,8 @@ to multi-turn conversation/agent transcript tables of shape
 ts timestamp)`` and re-expressed Spark-first:
 
 - parse stage: ``functions.parse_expr`` (pure JVM column expressions,
-  whole-stage codegen) and ``functions.parse_pandas`` (Arrow-vectorized
-  pandas UDF) — semantics of
+  whole-stage codegen) and ``functions.parse_arrow`` (pyarrow kernels via
+  ``mapInArrow``) — semantics of
   ``quake3-server-events/src/deserializer_logs.rs:15-169``
 - translation/projection: ``operators.translate`` —
   ``dal/src/events_translation.rs:13-39``

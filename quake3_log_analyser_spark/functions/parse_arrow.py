@@ -1,15 +1,15 @@
 """Arrow-native parser: pyarrow.compute kernels end-to-end, zero pandas.
 
-Third, fastest implementation of the line grammar
+The production Python implementation of the line grammar
 (quake3-server-events/src/deserializer_logs.rs:15-169 — see parse_expr.py
-for the semantics contract; all three parsers are cross-checked for
-equality on the fixture corpora).  Runs via ``DataFrame.mapInArrow``: Arrow
+for the semantics contract; it and the expr parser are cross-checked
+against the pandas test oracle, tests/parse_pandas.py).  Runs via ``DataFrame.mapInArrow``: Arrow
 RecordBatches cross the JVM<->Python boundary with NO pandas object-array
 materialization, and every operation below is a C++ kernel
 (split_pattern / extract_regex / utf8_ltrim / if_else) — measured ~10-20x
 faster per core than the pandas str API on the same lines.
 
-Like the pandas UDF, the PythonMapInArrow node is an optimizer barrier:
+The PythonMapInArrow node is an optimizer barrier:
 downstream predicates cannot be substituted into the parse expressions
 (the >64 KB janino hazard documented in operators/parse.py).
 """

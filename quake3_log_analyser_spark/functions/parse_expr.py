@@ -17,8 +17,8 @@ Everything is JVM-side (regexp/split/substr) so the stage fuses into
 WholeStageCodegen — the Spark analogue of the reference's "str::split beats
 regex 3200x" decision (benches/parsing_strategies.rs:9-12): stay
 vectorized/compiled, never row-at-a-time Python.  A semantically identical
-Arrow/pandas implementation lives in ``parse_pandas.py``; both are
-cross-checked in tests.
+pyarrow implementation lives in ``parse_arrow.py``; both are cross-checked
+in tests against a local pandas oracle (``tests/parse_pandas.py``).
 
 STRUCTURE NOTE: the parse is deliberately staged through intermediate
 projections (``_stripped`` -> ``_rest`` -> ``_event_name``/``_data`` ->

@@ -1,9 +1,9 @@
 """Parse stage: transcripts DataFrame -> flattened typed-event DataFrame.
 
-Three interchangeable implementations (cross-checked in tests).  The
-function default is ``parser="arrow"``; the pipeline entry points default
-to ``parser="auto"``, which picks ``expr`` for narrow consumed field sets
-and ``arrow`` otherwise (``choose_parser``):
+Two interchangeable production implementations (cross-checked in tests
+against a pandas oracle).  The function default is ``parser="arrow"``; the
+pipeline entry points default to ``parser="auto"``, which picks ``expr``
+for narrow consumed field sets and ``arrow`` otherwise (``choose_parser``):
 
 - ``parser="arrow"`` — pyarrow.compute kernels via ``mapInArrow``, the
   literal "vectorized grok UDF" stage of the north star.  The MapInArrow
@@ -15,11 +15,10 @@ and ``arrow`` otherwise (``choose_parser``):
   compilation and falls back to interpreted eval (measured: 191 s vs ~2 s
   on the same input).
 - ``parser="expr"`` — pure JVM column expressions (whole-stage codegen).
-  Fastest absolute and best-scaling when the consumed field set is narrow
-  (janino-safe re-inlining, see EXPR_SAFE_FIELD_BUDGET); the ``auto``
-  choice for the kills-family aggregate shapes.
-- ``parser="pandas"`` — Arrow-batched pandas UDF; same barrier as arrow
-  with ~3x slower string kernels, kept as a semantic cross-check.
+  Fastest absolute and best-scaling when the consumed field set is narrow:
+  re-inlining then copies only the consumed extractors, which stays under
+  the codegen limit (see EXPR_SAFE_FIELD_BUDGET).  The ``auto`` choice for
+  the kills-family aggregate shapes.
 
 Both keep parse failures in-band as ``parse_error_kind``/``parse_error``
 columns (the reference's ``Quake3Events::Error`` variant,
@@ -32,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.parse_expr import parse_expr_df
-from ..functions.parse_pandas import make_parse_pandas_udf
 from ..schemas import EVENT_COLUMN_NAMES
 
 # passthrough transcript columns carried beside the parsed struct
@@ -75,12 +73,10 @@ def parse_transcripts(
     single box.
 
     ``parser`` is one of:
-      * ``arrow``  (default) — pyarrow.compute kernels via mapInArrow; the
-        fastest path and an optimizer barrier (see module docstring)
-      * ``pandas`` — Arrow-batched pandas UDF (same barrier, ~10x slower
-        string kernels; kept as a semantic cross-check)
+      * ``arrow``  (default) — pyarrow.compute kernels via mapInArrow;
+        an optimizer barrier, safe for any field set (see module docstring)
       * ``expr``   — pure JVM column expressions (whole-stage codegen);
-        safe only when the full parsed column set is kept downstream
+        safe for narrow field sets that downstream filters re-inline
       * ``auto``   — ``choose_parser(fields)``: expr for narrow field
         sets, arrow otherwise
 
@@ -88,21 +84,20 @@ def parse_transcripts(
     on the first malformed line — a ``--pedantic`` gate that NO downstream
     plan rewrite (predicate pushdown, column pruning) can elide, because it
     fires inside the Python worker before any result column exists.  The
-    other parsers rely on the column gate in ``fail_on_feed_errors``.
+    expr parser relies on the column gate in ``fail_on_feed_errors``.
     """
     if parser == "auto":
         parser = choose_parser(fields)
     if pedantic and parser != "arrow":
         # never degrade a safety flag to a no-op: the in-task raise only
-        # exists on the arrow path; expr/pandas callers must gate via
+        # exists on the arrow path; expr callers must gate via
         # fail_on_feed_errors on the parsed columns (plans/pipeline.py does)
         raise ValueError(
             f"pedantic=True is enforced in-task only by parser='arrow' "
             f"(got {parser!r}); wrap the result in fail_on_feed_errors "
-            "for the expression/pandas parsers instead"
+            "for the expression parser instead"
         )
-    # pass through every non-event column (includes match columns when the
-    # caller sessionized on raw text first — see sessionize_raw)
+    # pass through every non-event column
     cols = [c for c in df.columns if c not in EVENT_COLUMN_NAMES]
     out_fields = (
         EVENT_COLUMN_NAMES
@@ -111,11 +106,6 @@ def parse_transcripts(
     )
     if parser == "expr":
         return parse_expr_df(df.select(*cols)).select(*cols, *out_fields)
-    if parser == "pandas":
-        ev = make_parse_pandas_udf()(df["text"])
-        return df.select(*cols, ev.alias("_ev")).select(
-            *cols, *[f"_ev.{f}" for f in out_fields]
-        )
     if parser == "arrow":
         from pyspark.sql import types as T
 
@@ -133,7 +123,7 @@ def parse_transcripts(
             ),
             schema=out_schema,
         )
-    raise ValueError(f"unknown parser {parser!r} (want 'arrow', 'pandas' or 'expr')")
+    raise ValueError(f"unknown parser {parser!r} (want 'arrow', 'expr' or 'auto')")
 
 def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     """Pedantic feed gate: abort the job on the FIRST in-band parse error.
@@ -141,14 +131,14 @@ def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     The reference's ``--pedantic`` flag sets ``stop_on_feed_errors``
     (app/src/main.rs:84-85), turning every ``LogParsingError`` fatal.  The
     distributed analogue: ``raise_error`` folded into BOTH ``turn_idx`` and
-    ``event_type``.  Gating ``turn_idx`` alone is NOT pushdown-proof: when
-    no window consumes ``turn_idx`` after the parse (the session-first
-    path), Catalyst pushes summarize's ``event_type`` filter below this
-    projection and the error rows are discarded before the gate evaluates
-    (the round-2 ADVICE repro).  ``event_type`` is consumed by every
-    downstream filter/groupBy, and predicate-pushdown SUBSTITUTES the gated
-    expression into the pushed filter — so evaluating the filter on an
-    error row fires the raise wherever the filter lands in the plan.
+    ``event_type``.  Gating ``turn_idx`` alone is NOT pushdown-proof: a
+    plan in which nothing consumes ``turn_idx`` after the parse lets
+    Catalyst push an ``event_type`` filter below this projection, and the
+    error rows are discarded before the gate evaluates.  ``event_type`` is
+    consumed by every downstream filter/groupBy, and predicate-pushdown
+    SUBSTITUTES the gated expression into the pushed filter — so evaluating
+    the filter on an error row fires the raise wherever the filter lands in
+    the plan.
     """
     err = F.col("parse_error_kind").isNotNull()
 

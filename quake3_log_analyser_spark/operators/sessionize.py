@@ -21,8 +21,9 @@ machine expressible as ``last(marker) IGNORE NULLS`` over
 per-row Python, and a NAIVE running-sum-of-InitGame would be WRONG
 (it would split a match at a DoubleInit, which the reference does not).
 
-Scale notes: this is the pipeline's one unavoidable shuffle; bucketing
-the source table by ``conv_id`` (see sources/) makes it shuffle-free, and
+Scale notes: this is the pipeline's one shuffle; a source table bucketed
+by ``conv_id`` and sorted by ``(conv_id, turn_idx)`` feeds the window with
+no exchange and no sort (session.py reports the bucket sort order), and
 hot conversations are bounded by per-conv state of O(1).
 """
 
@@ -93,64 +94,6 @@ def sessionize(df: DataFrame) -> DataFrame:
         F.sum(F.col("is_match_start").cast("int")).over(w_incl).cast("int"),
     ).drop("_igb")
     return df
-
-
-def sessionize_raw(transcripts: DataFrame) -> DataFrame:
-    """Sessionize straight on RAW text — the bucketed-table fast path.
-
-    Match delimiters need only "is this line an InitGame/ShutdownGame
-    event", which a cheap JVM regex decides EXACTLY like the full parser:
-    the line must lstrip-spaces, have a first-space split, a rest that
-    doesn't start with '-', and an event name (text before the first ':')
-    equal to the delimiter — i.e. ``^ *[^ ]+ (InitGame|ShutdownGame):``.
-    (A rest with no colon is an UnrecognizedLineFormat error in the parser
-    and matches no delimiter here either; a '-' rest is a Comment and
-    cannot match because the group must start the token.)
-
-    Because this runs BEFORE the Python parse boundary, a source bucketed +
-    sort-ordered by (conv_id, turn_idx) feeds the window with NO shuffle
-    and NO sort — the single biggest lever at 10^12-turn scale.  The full
-    parse (mapInArrow) then runs on the already-sessionized rows.
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
-    w_incl = w.rowsBetween(Window.unboundedPreceding, 0)
-
-    m = F.regexp_extract("text", r"^ *[^ ]+ (InitGame|ShutdownGame):", 1)
-    marker = F.when(m != "", m)
-    in_game_before = F.coalesce(
-        F.last(marker, ignorenulls=True).over(w_excl) == "InitGame", F.lit(False)
-    )
-    df = transcripts.withColumns(
-        {
-            "_marker": marker,
-            "_in_game_before": in_game_before,
-        }
-    )
-    df = df.withColumns(
-        {
-            "is_match_start": F.coalesce(
-                (F.col("_marker") == "InitGame") & ~F.col("_in_game_before"),
-                F.lit(False),
-            ),
-            "is_match_end": F.coalesce(
-                (F.col("_marker") == "ShutdownGame") & F.col("_in_game_before"),
-                F.lit(False),
-            ),
-        }
-    )
-    df = df.withColumns(
-        {
-            "match_id": F.sum(F.col("is_match_start").cast("int"))
-            .over(w_incl)
-            .cast("int"),
-            # projection, not a second windowed last (see sessionize)
-            "in_game": F.when(
-                F.col("_marker").isNotNull(), F.col("_marker") == "InitGame"
-            ).otherwise(F.col("_in_game_before")),
-        }
-    )
-    return df.drop("_marker", "_in_game_before")
 
 
 def match_control(sessionized: DataFrame) -> DataFrame:

@@ -22,12 +22,12 @@ Where skew bites in this pipeline, and the chosen remedy for each:
 * **The sessionize window** (``partitionBy(conv_id)``): cannot be salted
   — match assembly is stateful over the FULL ordered turn sequence of a
   conversation, so splitting a conv across tasks breaks the semantics.
-  The posture is (a) the bucketed ``session_first`` layout that removes
-  the shuffle entirely and (b) measured tolerance: one conversation
-  holding 10% of all turns runs at parity with uniform input
-  (BENCH/BASELINE.md round 3), because a window task of a few hundred
-  thousand rows is far below the straggler threshold at any realistic
-  turns-per-conversation.
+  The posture is (a) a conv_id-bucketed, (conv_id, turn_idx)-sorted
+  source table, on which the window needs no shuffle at all, and (b)
+  measured tolerance: one conversation holding 10% of all turns runs at
+  parity with uniform input (BENCH/BASELINE.md round 3), because a
+  window task of a few hundred thousand rows is far below the straggler
+  threshold at any realistic turns-per-conversation.
 
 * **The order-dependent replay fold** (one ``applyInPandas`` group per
   conv): same constraint and same posture as the window.

@@ -57,15 +57,11 @@ def domain_filter() -> "F.Column":
 def translate(
     parsed: DataFrame,
     keep_columns: list[str] | None = None,
-    with_filter: bool = True,
 ) -> DataFrame:
-    """Narrow to the domain column set; optionally drop irrelevant events.
+    """Drop irrelevant events and narrow to the domain column set.
 
-    ``with_filter=False`` skips the event-type filter — used by the exact
-    replay fold, whose per-conv loop ignores dropped types anyway (they
-    fall through its dispatch), avoiding the pushdown hazard above at the
-    cost of shuffling the dropped rows.
+    Safe directly on the arrow parse (a pushdown barrier) or above a
+    window; see ``domain_filter`` for why not on the expr parse chain.
     """
     keep = keep_columns or [c for c in DOMAIN_COLUMNS if c in parsed.columns]
-    kept = parsed.filter(domain_filter()) if with_filter else parsed
-    return kept.select(*keep)
+    return parsed.filter(domain_filter()).select(*keep)

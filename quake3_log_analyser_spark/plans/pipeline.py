@@ -7,11 +7,13 @@ composed, and Catalyst prunes everything an omitted op would have computed
 (the reference's "only pay for what you use" claim, summary_logic.rs:30,
 is column pruning for us).
 
-Path selection:
+One plan per op menu:
 * ops without ``player_resolutions``  -> fully vectorized DataFrame path
-  (kills / means / scores are order-insensitive aggregates)
+  (kills / means / scores are order-insensitive aggregates): expr parse
+  -> sessionize window -> one two-level aggregation, no Python
 * ops with ``player_resolutions``     -> exact grouped-map replay fold
   (rename/disconnect/reconnect are order-dependent, summary_logic.rs:210-287)
+  over the arrow parse
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.parse import choose_parser, fail_on_feed_errors, parse_transcripts
-from ..operators.sessionize import sessionize, sessionize_raw
+from ..operators.sessionize import sessionize
 from ..operators.summarize import (
     DEFAULT_EXTENDED_OPS,
     summarize_extended,
@@ -37,19 +39,17 @@ KILLS_ONLY = frozenset({"kills"})
 def summarize_matches(
     transcripts: DataFrame,
     ops: frozenset[str] | set[str] = KILLS_ONLY,
-    parser: str = "auto",
     stop_on_violations: bool = False,
-    session_first: bool = False,
     stop_on_feed_errors: bool = False,
     early_discard: bool = True,
 ) -> DataFrame:
     """transcripts -> per-match summary DataFrame (MATCH_SUMMARY_SCHEMA).
 
-    ``session_first=True`` sessionizes on RAW text before parsing
-    (operators.sessionize.sessionize_raw): with a conv_id-bucketed,
-    (conv_id, turn_idx)-sorted source table the window then needs NO
-    shuffle and NO sort — the preferred plan at scale.  Results are
-    identical either way (asserted in tests).
+    The parser comes from ``choose_parser`` on the consumed fields.  On a
+    conv_id-bucketed, (conv_id, turn_idx)-sorted source table the
+    vectorized plan needs NO exchange and NO sort: the bucket layout
+    satisfies the window and both aggregation levels (plan-pinned in
+    tests/test_plans.py).
 
     ``stop_on_feed_errors=True`` is the reference's ``--pedantic`` feed
     gate (app/src/main.rs:84-85): the job FAILS on the first malformed
@@ -73,30 +73,18 @@ def summarize_matches(
     if "reported_scores" in ops:
         agg_base += ["name", "frags"]
 
-    if parser == "auto":
-        # per-query-shape selection (operators.parse.choose_parser): the
-        # fold path keeps 9 event fields -> arrow barrier; the vectorized
-        # kills-family paths keep 2-5 -> the faster, better-scaling expr
-        # parser (janino-safe at that width).  session_first also takes
-        # expr now: the parse sits ABOVE the window there, so summarize's
-        # filters have no shuffle fence below them and Catalyst would
-        # re-inline the full dispatch tree into the aggregation stage
-        # (janino >64KB, measured 19.6 s interpreted-fallback) — the
-        # round-3 fix was forcing the arrow barrier, whose parse scales at
-        # 0.27-0.37; round 4 instead plants a NON-DETERMINISTIC fence
-        # column in the parse projection (below), which blocks
-        # PushDownPredicates' substitution through the Project without any
-        # shuffle or Python boundary, keeping the 0.59-scaling expr parser
-        # on the no-shuffle bucketed plan.
-        parser = choose_parser(
-            FOLD_FIELDS if "player_resolutions" in ops else agg_base
-        )
+    # per-query-shape selection (operators.parse.choose_parser): the fold
+    # path keeps 9 event fields -> arrow barrier; the vectorized
+    # kills-family paths keep 2-5 -> the faster, better-scaling expr
+    # parser (janino-safe at that width)
+    fold = "player_resolutions" in ops
+    parser = choose_parser(FOLD_FIELDS if fold else agg_base)
 
     # pedantic enforcement is parser-dependent (both are pushdown-proof,
     # see operators.parse.fail_on_feed_errors for why turn_idx alone isn't):
     #  * arrow  — raise INSIDE the parse task (pedantic=True below); no
     #    error columns ever reach the plan
-    #  * expr/pandas — raise_error gated into event_type + turn_idx, which
+    #  * expr   — raise_error gated into event_type + turn_idx, which
     #    every downstream filter/groupBy consumes
     pedantic_in_udf = stop_on_feed_errors and parser == "arrow"
     gate_cols = stop_on_feed_errors and not pedantic_in_udf
@@ -112,7 +100,7 @@ def summarize_matches(
     # Measured at 16M turns x 32 cores: 15.1s -> 8.2s for the parse stage.
     narrowed_in = transcripts.select("conv_id", "turn_idx", "text")
 
-    if "player_resolutions" in ops:
+    if fold:
         parsed = _gate(
             parse_transcripts(
                 narrowed_in,
@@ -121,11 +109,10 @@ def summarize_matches(
                 pedantic=pedantic_in_udf,
             )
         )
-        # the Python parsers (arrow/pandas) are pushdown barriers, so the
-        # domain filter is safe above them and trims ~40% of the rows the
-        # fold would otherwise shuffle; the expr parser is NOT a barrier
-        # (see operators.translate.domain_filter) — skip the filter there
-        domain = translate(parsed, with_filter=(parser != "expr"))
+        # the arrow parser is a pushdown barrier, so the domain filter is
+        # safe above it and trims ~40% of the rows the fold would
+        # otherwise shuffle (see operators.translate.domain_filter)
+        domain = translate(parsed)
         return summarize_extended(domain, ops, stop_on_violations)
 
     # EARLY DISCARD on RAW text (the reference's events_translation.rs
@@ -151,45 +138,16 @@ def summarize_matches(
 
     # dropped event types don't affect match state, and summarize filters
     # to Kill/Score rows above the window — no separate translate filter
-    agg_fields = agg_base + error_fields
-    if session_first:
-        raw_sess = sessionize_raw(narrowed_in)
-        sessionized = _gate(
+    sessionized = sessionize(
+        _gate(
             parse_transcripts(
-                raw_sess, parser=parser, fields=agg_fields, pedantic=pedantic_in_udf
+                narrowed_in,
+                parser=parser,
+                fields=agg_base + error_fields,
+                pedantic=pedantic_in_udf,
             )
         )
-        if parser == "expr":
-            # pushdown fence: PushPredicateThroughNonJoin only substitutes
-            # a filter through a Project whose expressions are ALL
-            # deterministic.  Wrapping the CONSUMED event_type in an
-            # always-true non-deterministic guard (monotonically_
-            # increasing_id() is non-negative by construction) taints the
-            # projection, so the aggregate filters evaluate plain
-            # attributes ABOVE the parse instead of re-inlining its
-            # ~60-expression tree (the janino >64KB compile failure that
-            # previously forced the arrow barrier here).  A detached
-            # fence COLUMN does not work: ColumnPruning strips an
-            # unreferenced column and the substitution comes back —
-            # the wrap survives because event_type is consumed.  Costs
-            # one long compare per row, no shuffle, no Python.
-            sessionized = sessionized.withColumn(
-                "event_type",
-                F.when(
-                    F.monotonically_increasing_id() >= 0, F.col("event_type")
-                ),
-            )
-    else:
-        sessionized = sessionize(
-            _gate(
-                parse_transcripts(
-                    narrowed_in,
-                    parser=parser,
-                    fields=agg_fields,
-                    pedantic=pedantic_in_udf,
-                )
-            )
-        )
+    )
     # ONE two-level aggregation for every requested op (kills + means +
     # scores): the old branch-and-join composition re-computed the parse +
     # window DAG once per branch — 3 scans, 0 ReusedExchange, confirmed by

@@ -81,10 +81,6 @@ EVENT_FIELDS: list[tuple[str, T.DataType]] = [
     ("parse_error", T.StringType()),
 ]
 
-EVENT_STRUCT = T.StructType(
-    [T.StructField(n, t, True) for n, t in EVENT_FIELDS]
-)
-
 EVENT_COLUMN_NAMES = [n for n, _ in EVENT_FIELDS]
 
 # event types dropped by the domain translation

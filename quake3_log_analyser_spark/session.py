@@ -101,11 +101,14 @@ def get_spark(
         # threshold (8000 bytecodes): a generated whole-stage method between
         # 8 KB and the 64 KB default COMPILES under janino but HotSpot
         # refuses to JIT it, so the fused stage runs interpreted bytecode
-        # forever.  Measured on the no-exchange bucketed session-first plan
-        # (window + fenced expr parse + two aggregation levels fused into
-        # one stage): 25-30 s default vs 15 s with the 8000 cap at 16M
-        # turns x 16 cores.  Over-limit stages fall back to per-operator
-        # codegen, which HotSpot does JIT; under-limit stages keep fusion.
+        # forever.  Over-limit stages fall back to per-operator codegen,
+        # which HotSpot does JIT; under-limit stages keep fusion.  The one
+        # measured win (25-30 s -> 15 s at 16M turns x 16 cores) was on a
+        # since-removed plan that fused a raw-text window, the parse and
+        # both aggregation levels into one stage.  Kept because a re-measure
+        # with and without the cap on 4 cores was unresolved: the kills
+        # summary read 1.83 s / 1.84 s and the job steps 2.84 s / 3.08 s,
+        # both inside run-to-run spread.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # report the (conv_id, turn_idx) sort order of one-file-per-bucket
         # bucketed tables so the sessionize window skips its Sort entirely

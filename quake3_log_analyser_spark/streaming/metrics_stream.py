@@ -14,10 +14,10 @@ bounded over an unbounded stream.
 Spark-first shape: ``withWatermark("ts", ...)`` + ``groupBy(window(...))``
 — incremental partial aggregation in the state store, append-mode
 emission on watermark passage, automatic state eviction.  The event
-classifier is the same cheap JVM regex family ``sessionize_raw`` uses
-(event name = text before the first ':' of the second token), so the hot
-path carries no Python at all; the distinct-conversation count is a
-streaming-legal HyperLogLog (``approx_count_distinct``).
+classifier is a cheap JVM regex (event name = text before the first ':'
+of the second token), so the hot path carries no Python at all; the
+distinct-conversation count is a streaming-legal HyperLogLog
+(``approx_count_distinct``).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# same delimiter-grammar prefix the raw sessionizer anchors on
+# the line grammar's event-name prefix (functions/parse_expr.py)
 _EVENT_RE = r"^ *[^ ]+ ([A-Za-z]+):"
 
 

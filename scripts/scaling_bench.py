@@ -64,7 +64,7 @@ def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     turns_m = int(sys.argv[2]) if len(sys.argv) > 2 else 16
     # "bucketed" = the deployment plan (conv_id-bucketed sorted table,
-    # session-first fenced-expr, zero exchanges) — the r4 2->8 pair on it
+    # zero exchanges) — the r4 2->8 pair on it
     # measured 0.94-0.99; "adhoc" = plain parquet + shuffle/sort window
     mode = sys.argv[3] if len(sys.argv) > 3 else "adhoc"
     tpath = ensure_big_table(turns_m * 1_000_000)
@@ -116,7 +116,7 @@ Notes:
 - the per-round BENCH_r{{N}}.json comes from bench.py at sf0.1 (~1.5M
   turns), where fixed startup dominates — scaling numbers are only
   meaningful on this harness's larger table;
-- the bucketed + session-first plan (bench `pipeline_kills_bucketed`)
+- the bucketed plan (bench `pipeline_kills_bucketed`)
   removes the one remaining shuffle+sort before the window; at cluster
   scale that plan's scaling is limited only by the post-parse grouped
   aggregations.

@@ -6,9 +6,9 @@ Usage: python scripts/scaling_worker.py <cpus> <transcripts_path> [reps] [mode]
 
 mode:
   adhoc     (default) plain parquet scan -> parse -> shuffle+sort window
-  bucketed  conv_id-bucketed (conv_id, turn_idx)-sorted table ->
-            session-first raw window with NO shuffle and NO sort — the
-            plan a 10^12-turn Iceberg deployment would run
+  bucketed  conv_id-bucketed (conv_id, turn_idx)-sorted table -> the same
+            pipeline with NO shuffle and NO sort — the plan a 10^12-turn
+            Iceberg deployment would run
 
 n_buckets (bucketed mode, default 64) and max_partition_mb (default 64)
 parameterize the round-5 closing matrix on the 4->16 pair.
@@ -62,7 +62,7 @@ def main():
 
     def run():
         return (
-            summarize_matches(t, ops={"kills"}, session_first=(mode == "bucketed"))
+            summarize_matches(t, ops={"kills"})
             .agg(F.count(F.lit(1)).alias("n"), F.sum("total_kills"))
             .collect()[0]["n"]
         )

@@ -8,7 +8,7 @@ Stages:
   scan       parquet scan + count (I/O + row decode floor)
   parse      Arrow parser (mapInArrow) + cheap agg — the Python boundary
   parse_expr JVM expression parser + same agg — the no-Python control
-  window     sessionize_raw window over raw text (shuffle + sort, no Python)
+  window     expr parse + sessionize window (shuffle + sort, no Python)
   e2e        full summarize_matches(kills) — parse + window + 2-level agg
 
 Usage:
@@ -34,7 +34,7 @@ def measure(cpus: int, stage: str, tpath: str, reps: int = 2) -> None:
     from pyspark.sql import functions as F
 
     from quake3_log_analyser_spark.operators.parse import parse_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize_raw
+    from quake3_log_analyser_spark.operators.sessionize import sessionize
     from quake3_log_analyser_spark.plans.pipeline import summarize_matches
     from quake3_log_analyser_spark.schemas import TRANSCRIPT_SCHEMA
     from quake3_log_analyser_spark.session import get_spark
@@ -58,7 +58,12 @@ def measure(cpus: int, stage: str, tpath: str, reps: int = 2) -> None:
             )
             return parsed.agg(F.count("killer_name")).collect()[0][0]
         if stage == "window":
-            sess = sessionize_raw(t.select("conv_id", "turn_idx", "text"))
+            sess = sessionize(
+                parse_transcripts(
+                    t.select("conv_id", "turn_idx", "text"),
+                    parser="expr", fields=["killer_name", "victim_name"],
+                )
+            )
             return sess.agg(F.sum(F.col("is_match_end").cast("long"))).collect()[0][0]
         if stage == "e2e":
             return (

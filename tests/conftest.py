@@ -24,3 +24,18 @@ def spark():
 
 def fixture_lines(path: Path) -> list[str]:
     return path.read_text(encoding="utf-8", errors="replace").splitlines()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Goldens gated on the external reference fixtures must not pass
+    silently: name the missing directory and count the tests it skipped."""
+    n = sum(
+        "reference fixture" in str(r.longrepr)
+        for r in terminalreporter.stats.get("skipped", [])
+    )
+    if n:
+        where = "is missing" if not REFERENCE_ROOT.exists() else "lacks fixture files"
+        terminalreporter.write_line(
+            f"{n} tests skipped for want of a reference fixture: "
+            f"{REFERENCE_ROOT} {where}"
+        )

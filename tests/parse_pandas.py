@@ -1,25 +1,21 @@
-"""Arrow-vectorized pandas-UDF parser — semantically identical to
-``parse_expr`` (see that module for the line grammar and the reference
-citations, quake3-server-events/src/deserializer_logs.rs:15-169).
+"""Pandas parser — the TEST ORACLE for the line grammar, semantically
+identical to ``parse_expr`` and ``parse_arrow`` (see parse_expr.py for the
+line grammar and the reference citations,
+quake3-server-events/src/deserializer_logs.rs:15-169).
 
-The core is a plain ``pd.Series -> pd.DataFrame`` function
-(``parse_lines_pd``) so the parser is unit-testable without a JVM, exactly
-like the reference's pure ``deserialize_log_line`` entry point
-(deserializer_logs.rs:15).  No per-row Python: every step is a vectorized
-``pd.Series.str`` operation over the whole Arrow batch.
-
-Tests cross-check this parser against ``parse_expr`` on every fixture line;
-``bench.py`` measures both (the Spark analogue of the reference's
-split-vs-regex study, benches/parsing_strategies.rs:9-12).
+``parse_lines_pd`` is a plain ``pd.Series -> pd.DataFrame`` function, so
+it runs locally with no JVM, like the reference's pure
+``deserialize_log_line`` entry point (deserializer_logs.rs:15).  Tests
+compare the two production parsers' Spark output against it on the same
+lines.  Every step is a vectorized ``pd.Series.str`` operation.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from ..schemas import EVENT_COLUMN_NAMES, EVENT_STRUCT
+from quake3_log_analyser_spark.schemas import EVENT_COLUMN_NAMES
 
 _INT32_MAX = 2147483647
 _U32_MAX = 4294967295
@@ -256,11 +252,18 @@ def parse_lines_pd(texts: pd.Series) -> pd.DataFrame:
     return out
 
 
-def make_parse_pandas_udf():
-    """Return a pandas UDF producing the wide event struct from ``text``."""
+def _py(v):
+    """pandas/numpy scalar -> the Python value a collected Spark row holds."""
+    if v is None or (not isinstance(v, str) and pd.isna(v)):
+        return None
+    return v.item() if hasattr(v, "item") else v
 
-    @F.pandas_udf(EVENT_STRUCT)
-    def parse_udf(texts: pd.Series) -> pd.DataFrame:
-        return parse_lines_pd(texts)
 
-    return parse_udf
+def oracle_rows(lines: list[str | None]) -> list[tuple]:
+    """``(turn_idx, *EVENT_COLUMN_NAMES)`` per line, turn_idx 1-based — the
+    shape of a collected Spark parse of ``transcripts_from_lines(lines)``."""
+    out = parse_lines_pd(pd.Series(lines, dtype=object))[EVENT_COLUMN_NAMES]
+    return [
+        (i + 1, *(_py(v) for v in row))
+        for i, row in enumerate(out.itertuples(index=False))
+    ]

@@ -2,9 +2,9 @@
 
 Two contracts that fixture goldens cannot exhaust:
 
-* the three parser implementations (expr / arrow / pandas) are ONE
-  semantics — any line, however adversarial, must produce identical typed
-  rows from all three;
+* the two production parsers (expr / arrow) and the local pandas oracle
+  (tests/parse_pandas.py) are ONE semantics — any line, however
+  adversarial, must produce identical typed rows from all three;
 * the vectorized kills-only aggregation and the exact replay fold are ONE
   semantics for the operator set both support — any event sequence must
   produce the same per-match summaries from both.
@@ -21,13 +21,14 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+from tests.parse_pandas import oracle_rows
 
 # payload text: no newlines (line-oriented source), allow the grammar's
 # own metacharacters (colons, backslashes, spaces) so the parsers'
 # splitting logic gets hit hard — AND the control characters the round-3
 # alphabet excluded (tab / NUL / vertical tab): the parsers ltrim SPACES
-# only and sessionize_raw's marker regex anchors on ' *', so any
-# tab-indentation divergence is visible only if tabs reach the fuzzer
+# only, so any tab-indentation divergence is visible only if tabs reach
+# the fuzzer
 _payload = st.text(
     alphabet=st.one_of(
         st.characters(
@@ -82,16 +83,14 @@ def test_three_parsers_agree_on_arbitrary_lines(spark, lines):
     from quake3_log_analyser_spark.schemas import EVENT_COLUMN_NAMES
 
     t = transcripts_from_lines(spark, lines, "fuzz")
-    results = {}
-    for parser in ("expr", "arrow", "pandas"):
+    oracle = oracle_rows(lines)
+    for parser in ("expr", "arrow"):
         rows = (
             parse_transcripts(t, parser=parser)
             .select("turn_idx", *EVENT_COLUMN_NAMES)
             .collect()
         )
-        results[parser] = sorted(tuple(r) for r in rows)
-    assert results["expr"] == results["arrow"], "expr vs arrow diverged"
-    assert results["expr"] == results["pandas"], "expr vs pandas diverged"
+        assert sorted(tuple(r) for r in rows) == oracle, f"{parser} vs oracle diverged"
 
 
 @settings(
@@ -145,42 +144,6 @@ def test_vectorized_equals_fold_on_arbitrary_sequences(spark, lines):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(lines=st.lists(_line, min_size=1, max_size=25))
-def test_session_first_equals_session_after(spark, lines):
-    """The bucketed fast path sessionizes on RAW text (sessionize_raw's
-    marker regex) while the default path sessionizes on parsed events —
-    the two delimiter decisions must agree on EVERY line, tab/NUL-indented
-    included, or a bucketed deployment would split matches differently
-    from an unbucketed one."""
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = transcripts_from_lines(spark, lines, "fuzz")
-
-    def norm(rows):
-        return sorted(
-            (
-                tuple(
-                    tuple(sorted(v, key=str)) if isinstance(v, list) else v
-                    for v in (
-                        r["conv_id"], r["match_id"], r["total_kills"],
-                        r["players"], r["kills"], r["graceful"], r["error"],
-                    )
-                )
-                for r in rows
-            ),
-            key=repr,
-        )
-
-    after = summarize_matches(t, ops={"kills"}).collect()
-    first = summarize_matches(t, ops={"kills"}, session_first=True).collect()
-    assert norm(after) == norm(first)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(lines=st.lists(_line, min_size=1, max_size=25))
 def test_multi_op_vectorized_equals_fold_full_rows(spark, lines):
     """The single-pass multi-op aggregation (summarize_multi) and the exact
     replay fold run the SAME op menu {kills, means_of_death, reported_scores}
@@ -219,7 +182,8 @@ def test_multi_op_vectorized_equals_fold_full_rows(spark, lines):
 
 def test_parsers_agree_on_seeded_random_corpus(spark):
     """Deterministic mega-fuzz: 3000 seeded random lines (grammar-shaped,
-    mutated, and raw garbage) through all three parsers in ONE job each —
+    mutated, and raw garbage) through both production parsers in ONE job
+    each, checked against the local pandas oracle —
     orders of magnitude more coverage per second than per-example
     property runs, and fully reproducible."""
     import random
@@ -273,16 +237,14 @@ def test_parsers_agree_on_seeded_random_corpus(spark):
                 lines.append(base[:i + 1] + base[i:])   # duplicate
 
     t = transcripts_from_lines(spark, lines, "megafuzz")
-    results = {}
-    for parser in ("expr", "arrow", "pandas"):
-        rows = (
-            parse_transcripts(t, parser=parser)
+    oracle = oracle_rows(lines)
+    for parser in ("expr", "arrow"):
+        rows = sorted(
+            tuple(r)
+            for r in parse_transcripts(t, parser=parser)
             .select("turn_idx", *EVENT_COLUMN_NAMES)
             .collect()
         )
-        results[parser] = sorted(tuple(r) for r in rows)
-    for a, b in (("expr", "arrow"), ("expr", "pandas")):
-        diffs = [
-            (x, y) for x, y in zip(results[a], results[b]) if x != y
-        ]
-        assert not diffs, f"{a} vs {b}: first diff {diffs[0]}"
+        assert len(rows) == len(oracle)
+        diffs = [(x, y) for x, y in zip(rows, oracle) if x != y]
+        assert not diffs, f"{parser} vs oracle: first diff {diffs[0]}"

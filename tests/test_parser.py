@@ -1,7 +1,8 @@
 """Parser unit tests — ports of every case in
 quake3-server-events/src/deserializer_logs.rs:172-363 (18 tests), run
-against BOTH parser implementations (pure pandas core + Spark expression
-parser) and cross-checked for equality.
+against the pandas test oracle and the Spark expression parser; both
+production parsers (expr / arrow) are then cross-checked against the
+oracle run locally on the same lines.
 """
 
 from __future__ import annotations
@@ -9,9 +10,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from quake3_log_analyser_spark.functions.parse_pandas import parse_lines_pd
 from quake3_log_analyser_spark.functions.parse_expr import parse_expr_df
 from quake3_log_analyser_spark.schemas import EVENT_COLUMN_NAMES
+from tests.parse_pandas import oracle_rows, parse_lines_pd
 
 INIT_DM = r" 1:47 InitGame: \sv_floodProtect\1\sv_maxPing\0\sv_minPing\0\sv_maxRate\10000\sv_minRate\0\sv_hostname\Code Miner Server\g_gametype\0\sv_privateClients\2\sv_maxclients\16\sv_allowDownload\0\bot_minplayers\0\dmflags\0\fraglimit\20\timelimit\15\g_maxGameClients\0\capturelimit\8\version\ioq3 1.36 linux-x86_64 Apr 12 2009\protocol\68\mapname\q3dm17\gamename\baseq3\g_needpass\0"
 INIT_CTF = r" 2:33 InitGame: \capturelimit\8\g_maxGameClients\0\timelimit\15\fraglimit\20\dmflags\0\bot_minplayers\0\sv_allowDownload\0\sv_maxclients\16\sv_privateClients\2\g_gametype\4\sv_hostname\Code Miner Server\sv_minRate\0\sv_maxRate\10000\sv_minPing\0\sv_maxPing\0\sv_floodProtect\1\version\ioq3 1.36 linux-x86_64 Apr 12 2009\protocol\68\mapname\Q3TOURNEY6_CTF\gamename\baseq3\g_needpass\0"
@@ -133,12 +134,14 @@ class TestExprParser:
 
 
 def test_parsers_agree_on_reference_fixtures(spark):
-    """All THREE parsers (expr / pandas / arrow) must produce identical
-    typed columns on every fixture line — including a NULL text row, which
+    """Both production parsers (expr / arrow) must produce the pandas
+    oracle's typed columns on every unit-case line, every reference
+    fixture line when the fixtures are present, and a NULL text row, which
     every parser must treat as the empty string (EmptyLine)."""
+    from quake3_log_analyser_spark.operators.parse import parse_transcripts
     from tests.conftest import FIXTURES_BLL, FIXTURES_DAL, fixture_lines
 
-    lines: list[str] = []
+    lines: list[str | None] = []
     for p in [
         FIXTURES_BLL / "qgames_permissive.log",
         FIXTURES_BLL / "discrepant.log",
@@ -147,47 +150,29 @@ def test_parsers_agree_on_reference_fixtures(spark):
     ]:
         if p.exists():
             lines.extend(fixture_lines(p))
-    if not lines:
-        pytest.skip("reference fixtures unavailable")
     lines.extend(ALL_LINES)
     lines.append(None)  # schema-legal NULL text
 
     df = spark.createDataFrame(
-        [(i, l) for i, l in enumerate(lines)], "idx int, text string"
+        [(i + 1, l) for i, l in enumerate(lines)], "turn_idx int, text string"
     )
-    cols = ["event_type", "parse_error_kind", "client_id", "name", "killer_id",
-            "victim_id", "reason_id", "killer_name", "victim_name",
-            "reason_name", "frags", "frag_limit", "capture_limit",
-            "time_limit_min", "red", "blue"]
-
-    def normalize(v):
-        if v is None or (not isinstance(v, str) and pd.isna(v)):
-            return None
-        if hasattr(v, "item"):
-            v = v.item()
-        return v
-
-    expr_out = parse_expr_df(df).select("idx", *cols).orderBy("idx").collect()
-    pd_out = parse_lines_pd(pd.Series(lines))
-
-    from quake3_log_analyser_spark.operators.parse import parse_transcripts
-
-    arrow_rows = (
-        parse_transcripts(df, parser="arrow")
-        .select("idx", *cols)
-        .orderBy("idx")
-        .collect()
-    )
-
-    mismatches = []
-    for i, row in enumerate(expr_out):
-        r = row.asDict()
-        a_row = arrow_rows[i].asDict()
-        p = pd_out.iloc[i]
-        for col in cols:
-            e, b, a = r[col], normalize(p[col]), normalize(a_row[col])
-            if not (e == b == a):
-                mismatches.append((i, lines[i], col, {"expr": e, "pandas": b, "arrow": a}))
-    assert not mismatches, f"{len(mismatches)} mismatches, first 5: {mismatches[:5]}"
-    null_row = expr_out[len(lines) - 1]
-    assert null_row["parse_error_kind"] == "EmptyLine"
+    oracle = oracle_rows(lines)
+    assert oracle[-1][EVENT_COLUMN_NAMES.index("parse_error_kind") + 1] == "EmptyLine"
+    for parser in ("expr", "arrow"):
+        got = [
+            tuple(r)
+            for r in parse_transcripts(df, parser=parser)
+            .select("turn_idx", *EVENT_COLUMN_NAMES)
+            .orderBy("turn_idx")
+            .collect()
+        ]
+        mismatches = [
+            (lines[o[0] - 1], {c: (x, y) for c, x, y in
+                               zip(EVENT_COLUMN_NAMES, g[1:], o[1:]) if x != y})
+            for g, o in zip(got, oracle) if g != o
+        ]
+        assert len(got) == len(oracle)
+        assert not mismatches, (
+            f"{parser} vs oracle: {len(mismatches)} mismatches, first 5: "
+            f"{mismatches[:5]}"
+        )

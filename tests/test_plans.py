@@ -3,8 +3,8 @@ must be visible in the plan, not assumed.
 
 - parquet filter pushdown + column pruning reach the scan
 - the enrich join is a BroadcastHashJoin (fact side never shuffles)
-- a bucketed, sorted source feeds the sessionize window with NO exchange
-  and NO sort
+- a bucketed, sorted source feeds the whole kills-family pipeline with
+  NO exchange and NO sort
 - the parse stages stay out of the >64KB-codegen failure mode (no
   fallback warnings => asserted indirectly by plan shape)
 """
@@ -46,9 +46,14 @@ def test_enrich_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_bucketed_window_has_no_exchange_or_sort(spark, tmp_path):
+def _assert_bucketed_plan_has_no_exchange_or_sort(spark, tmp_path, ops):
+    """Run the default ``summarize_matches`` for ``ops`` on a conv_id-bucketed,
+    (conv_id, turn_idx)-sorted table: the bucket partitioning satisfies the
+    window and both groupBys' clustering, and the bucket sort order feeds the
+    window, so the plan has no exchange, no sort and no Python boundary, and
+    it must collect under strict codegen."""
     from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize_raw
+    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
 
     df = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
     loc = str(tmp_path / "bucketed")
@@ -60,39 +65,69 @@ def test_bucketed_window_has_no_exchange_or_sort(spark, tmp_path):
         .option("path", loc)
         .saveAsTable("t_bucketed_plan_test")
     )
+    old = spark.conf.get("spark.sql.codegen.fallback", "true")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         t = spark.table("t_bucketed_plan_test")
-        sess = sessionize_raw(t.select("conv_id", "turn_idx", "text"))
-        plan = plan_of(sess)
-        window_half = plan[: plan.index("FileScan")]
-        assert "Window" in window_half
-        assert "Exchange" not in plan, "bucketed scan must not reshuffle"
-        assert not re.search(r"\bSort \[", plan), "bucket sort order must be reused"
+        out = summarize_matches(t, ops=ops)
+        plan = plan_of(out)
+        assert "Window" in plan[: plan.index("FileScan")], plan
+        assert "Exchange" not in plan, f"bucketed scan must not reshuffle: {plan}"
+        assert not re.search(r"\bSort \[", plan), (
+            f"bucket sort order must be reused: {plan}"
+        )
+        assert "MapInArrow" not in plan, plan
+        assert len(out.collect()) > 0
     finally:
+        spark.conf.set("spark.sql.codegen.fallback", old)
         spark.sql("DROP TABLE IF EXISTS t_bucketed_plan_test")
+
+
+def test_bucketed_window_has_no_exchange_or_sort(spark, tmp_path):
+    """The kills menu — expr parse + window + both aggregation levels — on
+    a bucketed, sorted table.  This is the 10^12-turn deployment plan."""
+    _assert_bucketed_plan_has_no_exchange_or_sort(spark, tmp_path, {"kills"})
+
+
+def test_session_first_bucketed_full_pipeline_no_exchange(spark, tmp_path):
+    """The widest kills-family menu on a bucketed, sorted table.  The name
+    dates from a separate session-first plan, since removed: the default
+    parse-first plan now reads the bucketed table with no exchange."""
+    _assert_bucketed_plan_has_no_exchange_or_sort(
+        spark, tmp_path, {"kills", "means_of_death", "reported_scores"}
+    )
 
 
 def test_session_window_single_shuffle_unbucketed(spark):
     """Plain (unbucketed) input: exactly ONE exchange below the window —
     both window passes share the same partitioning."""
     from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize_raw
+    from quake3_log_analyser_spark.operators.parse import parse_transcripts
+    from quake3_log_analyser_spark.operators.sessionize import sessionize
 
     t = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
-    plan = plan_of(sessionize_raw(t.select("conv_id", "turn_idx", "text")))
+    sess = sessionize(
+        parse_transcripts(
+            t.select("conv_id", "turn_idx", "text"),
+            parser="expr", fields=["killer_name", "victim_name"],
+        )
+    )
+    plan = plan_of(sess)
     assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1
 
 
 def test_pipeline_narrows_input_before_python_boundary(spark):
-    """mapInArrow blocks Catalyst pruning, so the pipeline must select only
-    (conv_id, turn_idx, text) BEFORE the parse — the ArrowEvalPython /
-    mapInArrow node's input schema proves it (measured 2x on the parse
-    stage at 16M turns)."""
+    """mapInArrow blocks Catalyst pruning, so the fold pipeline must select
+    only (conv_id, turn_idx, text) BEFORE the parse — the mapInArrow node's
+    input schema proves it (measured 2x on the parse stage at 16M turns)."""
     from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
+    from quake3_log_analyser_spark.plans.pipeline import (
+        full_pipeline_ops,
+        summarize_matches,
+    )
 
     t = generate_transcripts(spark, n_convs=4, turns_per_conv=24)
-    plan = plan_of(summarize_matches(t, ops={"kills"}, parser="arrow"))
+    plan = plan_of(summarize_matches(t, ops=full_pipeline_ops()))
     m = re.search(r"MapInArrow .*?\[([^\]]*)\]", plan)
     assert m, plan
     in_cols = {c.split("#")[0].strip() for c in m.group(1).split(",")}
@@ -185,81 +220,3 @@ def test_multi_op_vectorized_is_single_pass(spark):
     assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1, plan
     assert len(re.findall(r"\bWindow ", plan)) == 2, plan
     assert "Join" not in plan, plan
-
-
-def test_auto_parser_session_first_takes_fenced_expr(spark):
-    """session_first puts the parse ABOVE the window — without a fence,
-    Catalyst substitutes summarize's filters through the parse projection
-    and the re-inlined tree fails janino (>64KB, measured 19.6 s
-    interpreted fallback; that failure previously forced the arrow
-    barrier here, whose parse scales at 0.27-0.37 vs expr's 0.59).  The
-    round-4 non-deterministic wrap on event_type blocks the substitution,
-    so auto now keeps the expr parser: no Python boundary in the plan,
-    the fence visible, and the whole pipeline survives strict codegen."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = generate_transcripts(spark, n_convs=6, turns_per_conv=60)
-    df = summarize_matches(t, ops={"kills"}, session_first=True)
-    plan = plan_of(df)
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
-    assert "monotonically" in plan, "pushdown fence missing from the plan"
-    old = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        assert len(df.collect()) > 0
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
-
-
-def test_session_first_multiop_fenced_expr_strict_codegen(spark):
-    """session_first x multi-op: the fenced expr parse and the single-pass
-    typed-entry aggregation compose — no Python boundary, no join, and the
-    whole plan survives strict codegen; results match the parse-first
-    plan."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = generate_transcripts(spark, n_convs=6, turns_per_conv=60)
-    ops = {"kills", "means_of_death", "reported_scores"}
-    df = summarize_matches(t, ops=ops, session_first=True)
-    plan = plan_of(df)
-    assert "MapInArrow" not in plan and "Join" not in plan
-    old = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        got = sorted([tuple(map(repr, r)) for r in df.collect()])
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
-    want = sorted(
-        [tuple(map(repr, r)) for r in summarize_matches(t, ops=ops).collect()]
-    )
-    assert got == want
-
-
-def test_session_first_bucketed_full_pipeline_no_exchange(spark, tmp_path):
-    """On a conv_id-bucketed, (conv_id, turn_idx)-sorted table the ENTIRE
-    session-first kills pipeline — raw window + fenced expr parse + both
-    aggregation levels — needs NO exchange at all: the bucket partitioning
-    satisfies the window and both groupBys' clustering.  This is the
-    10^12-turn deployment plan."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    df = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
-    loc = str(tmp_path / "bucketed_full")
-    (
-        df.repartition(4, "conv_id")
-        .write.mode("overwrite")
-        .bucketBy(4, "conv_id")
-        .sortBy("conv_id", "turn_idx")
-        .option("path", loc)
-        .saveAsTable("t_bucketed_full_plan_test")
-    )
-    try:
-        t = spark.table("t_bucketed_full_plan_test")
-        plan = plan_of(summarize_matches(t, ops={"kills"}, session_first=True))
-        assert "Exchange" not in plan, plan
-        assert "MapInArrow" not in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_full_plan_test")

@@ -246,24 +246,28 @@ def test_stop_on_feed_errors_passes_clean_input(spark):
     assert len([r for r in rows if r["error"] is None]) == 20
 
 
-@pytest.mark.parametrize("parser", ["arrow", "expr", "pandas"])
-def test_stop_on_feed_errors_is_pushdown_proof_session_first(spark, parser):
-    """Round-2 ADVICE (high): with session_first=True no window consumes
-    turn_idx after the parse, so a turn_idx-only raise_error gate was
-    elided by predicate pushdown and the pedantic job silently succeeded
-    with 0 rows.  The gate must fire for EVERY parser on this path."""
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_file
+@pytest.mark.parametrize("ops", ["kills", "fold"])
+def test_stop_on_feed_errors_fires_on_both_plans(spark, ops):
+    """The pedantic gate must fire on both op-menu plans: the kills-family
+    plan gates the expr parse's columns (fail_on_feed_errors), the fold
+    plan raises inside the arrow parse task.  A malformed line between two
+    delimiters must fail the job, not ride out as a dead-letter row."""
+    from quake3_log_analyser_spark.plans.pipeline import (
+        full_pipeline_ops,
+        summarize_matches,
+    )
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
 
-    path = FIXTURES_DAL / "malformed_line.log"
-    if not path.exists():
-        pytest.skip("reference fixture unavailable")
-    t = transcripts_from_file(spark, str(path), "malformed")
+    lines = [
+        r" 0:00 InitGame: \fraglimit\20",
+        " 0:01 ClientConnect: 2a",
+        " 0:02 ShutdownGame:",
+    ]
+    t = transcripts_from_lines(spark, lines, "c0")
+    menu = {"kills"} if ops == "kills" else full_pipeline_ops()
+    assert summarize_matches(t, ops=menu).collect()  # permissive: completes
     with pytest.raises(Exception, match="LogParsingError"):
-        summarize_matches(
-            t, ops={"kills"}, parser=parser,
-            session_first=True, stop_on_feed_errors=True,
-        ).collect()
+        summarize_matches(t, ops=menu, stop_on_feed_errors=True).collect()
 
 
 def test_render_conv_reports_validates_fold_columns(spark):

@@ -8,12 +8,16 @@ from __future__ import annotations
 
 import pytest
 
+from quake3_log_analyser_spark.functions.replay import new_state, replay_events
 from quake3_log_analyser_spark.plans.pipeline import summarize_matches
+from quake3_log_analyser_spark.schemas import EVENT_COLUMN_NAMES
 from quake3_log_analyser_spark.sources.transcripts import (
     transcripts_from_file,
     transcripts_from_lines,
 )
+from quake3_log_analyser_spark.streaming.session_stream import FOLD_COLS
 from tests.conftest import FIXTURES_BLL, FIXTURES_DAL
+from tests.parse_pandas import oracle_rows
 
 BASIC = frozenset({"kills"})
 FULL = frozenset({"kills", "means_of_death", "player_resolutions", "reported_scores"})
@@ -53,9 +57,9 @@ def exit_():
     return " 0:02 Exit: Timelimit hit."
 
 
-def run(spark, lines, ops, parser="expr", stop=False):
+def run(spark, lines, ops, stop=False):
     t = transcripts_from_lines(spark, lines, "c0")
-    rows = summarize_matches(t, ops=ops, parser=parser, stop_on_violations=stop).collect()
+    rows = summarize_matches(t, ops=ops, stop_on_violations=stop).collect()
     return sorted(rows, key=lambda r: (r["conv_id"], r["match_id"]))
 
 
@@ -116,6 +120,8 @@ def test_means_of_death(spark):
 # --- rs:521-583 world_kills ---------------------------------------------------
 @pytest.mark.parametrize("parser", ["expr", "pandas"])
 def test_world_kills_negative(spark, parser):
+    """``expr``: the Spark kills plan.  ``pandas``: the pandas parser oracle
+    folded by the reference replay — both must agree on world kills."""
     lines = [
         init_game(),
         kill(1022, 2, 1, "<world>", "Player2", "NONE"),
@@ -123,7 +129,12 @@ def test_world_kills_negative(spark, parser):
         kill(2022, 1, 2, "<world>", "Player1", "NONE"),
         shutdown(),
     ]
-    rows = run(spark, lines, BASIC, parser=parser)
+    if parser == "expr":
+        rows = run(spark, lines, BASIC)
+    else:
+        cols = [0] + [1 + EVENT_COLUMN_NAMES.index(c) for c in FOLD_COLS[1:]]
+        events = [tuple(r[i] for i in cols) for r in oracle_rows(lines)]
+        rows = replay_events(new_state(), "c0", events, BASIC)
     s = summaries(rows)
     assert len(s) == 1
     assert s[0]["total_kills"] == 3
@@ -437,36 +448,17 @@ def test_malformed_lines_in_band_errors(spark):
         assert rows[i]["parse_error_kind"] is None
 
 
-# --- session-first (bucketed fast path) parity ---------------------------------
-def test_session_first_equals_parse_first(spark):
-    """sessionize_raw on raw text + late parse must produce identical
-    summaries to the parse-first plan (same marker semantics)."""
+# --- permissive log: 20 matches + the documented DoubleInit ---------------------
+def test_permissive_log_20_matches_and_double_init(spark):
     path = FIXTURES_BLL / "qgames_permissive.log"
     if not path.exists():
         pytest.skip("reference fixture unavailable")
     t = transcripts_from_file(spark, str(path), "permissive")
-
-    def norm(rows):
-        return sorted(
-            (
-                (
-                    r["conv_id"], r["match_id"], r["total_kills"],
-                    tuple(r["players"] or []),
-                    tuple((k["player"], k["frags"]) for k in (r["kills"] or [])),
-                    r["graceful"], r["error"],
-                )
-                for r in rows
-            ),
-            key=str,
-        )
-
-    a_rows = summarize_matches(t, ops={"kills"}).collect()
-    b_rows = summarize_matches(t, ops={"kills"}, session_first=True).collect()
-    assert norm(a_rows) == norm(b_rows)
+    rows = summarize_matches(t, ops={"kills"}).collect()
     # 20 summaries + the DoubleInit at event #98 (the exact pair of
     # warnings the reference documents for this file, app/src/main.rs:44-48)
-    assert len([r for r in a_rows if r["error"] is None]) == 20
-    errs = [r["error"] for r in a_rows if r["error"] is not None]
+    assert len([r for r in rows if r["error"] is None]) == 20
+    errs = [r["error"] for r in rows if r["error"] is not None]
     assert errs == ["Event #98: violated the event model: DoubleInit"]
 
 
@@ -488,8 +480,8 @@ def test_early_discard_equals_unfiltered_on_fixtures(spark):
     """The raw-text early-discard filter is an over-approximation that must
     not change ANY summary output — checked against the reference fixtures
     (which contain say/chat lines with arbitrary content) by comparing the
-    filtered pipeline to a parser-forced run without it (stop_on_feed_errors
-    unused, so only the filter differs)."""
+    filtered pipeline to a run with ``early_discard=False``
+    (stop_on_feed_errors unused, so only the filter differs)."""
     checked = 0
     for fixture, root in [
         ("qgames_permissive.log", FIXTURES_BLL),
