@@ -106,7 +106,7 @@ def main() -> None:
     else:
         for rep in range(args.reps):
             t_rep0 = time.perf_counter()
-            # pedantic gates the SINKS parse too: the in-task raise fires
+            # pedantic gates the SINKS parse too: the feed gate fires
             # during the first write job, so no sink output ever commits
             # from a run that must fail on the first malformed line (the
             # reference --pedantic aborts before emitting anything)

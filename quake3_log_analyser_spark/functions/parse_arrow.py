@@ -365,58 +365,21 @@ def parse_text_batch(
     return out
 
 
-def make_map_in_arrow_fn(
-    passthrough: list[str],
-    fields: list[str] | None = None,
-    pedantic: bool = False,
-):
+def make_map_in_arrow_fn(passthrough: list[str], fields: list[str] | None = None):
     """RecordBatch iterator transform for ``DataFrame.mapInArrow``.
 
-    ``pedantic=True`` raises on the first malformed line IN THE PARSE TASK
-    (the reference's ``--pedantic`` / ``stop_on_feed_errors`` contract,
-    app/src/main.rs:84-85).  Raising here — rather than via a downstream
-    ``raise_error`` column — is immune to predicate pushdown / column
-    pruning eliding the gate (the round-2 ADVICE bypass): the error fires
-    before any output column exists for the optimizer to drop.
+    Malformed lines stay in-band (``parse_error_kind``/``parse_error``);
+    ``--pedantic`` is enforced above this function by
+    ``operators.parse.parse_transcripts(pedantic=True)``, the same column
+    gate for both parsers.
     """
-    parse_fields = fields
-    if pedantic and fields is not None:
-        parse_fields = list(
-            dict.fromkeys([*fields, "parse_error_kind", "parse_error"])
-        )
-    emit = None if fields is None else {*fields, "event_type"}
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # optional knob: cap pyarrow's per-worker thread pool.  Measured on
-        # this box: the DEFAULT pool wins inside Spark (kernel threads
-        # overlap with IPC deserialization); a 1-thread cap was ~1.5x
-        # slower at 32 workers despite the apparent oversubscription.
-        import os
-
-        if "SPARK_GRAFT_ARROW_THREADS" in os.environ:
-            pa.set_cpu_count(int(os.environ["SPARK_GRAFT_ARROW_THREADS"]))
         for batch in batches:
-            cols = parse_text_batch(batch.column("text"), parse_fields)
-            if pedantic:
-                bad = pc.is_valid(cols["parse_error_kind"])
-                if pc.any(bad).as_py():
-                    idx = pc.index(bad, pa.scalar(True)).as_py()
-                    turn = (
-                        batch.column("turn_idx")[idx].as_py()
-                        if "turn_idx" in batch.schema.names
-                        else -1
-                    )
-                    raise ValueError(
-                        f"Failed to process event #{turn}: "
-                        f"`LogParsingError`: {cols['parse_error'][idx].as_py()}"
-                    )
-            arrays = [batch.column(c) for c in passthrough]
-            names = list(passthrough)
-            for k, v in cols.items():
-                if emit is not None and k not in emit:
-                    continue
-                arrays.append(v)
-                names.append(k)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            cols = parse_text_batch(batch.column("text"), fields)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in passthrough] + list(cols.values()),
+                names=[*passthrough, *cols],
+            )
 
     return fn

@@ -22,7 +22,9 @@ for narrow consumed field sets and ``arrow`` otherwise (``choose_parser``):
 
 Both keep parse failures in-band as ``parse_error_kind``/``parse_error``
 columns (the reference's ``Quake3Events::Error`` variant,
-model/src/quake3_events.rs:25): a bad row never aborts the pipeline.
+model/src/quake3_events.rs:25): a bad row never aborts the pipeline —
+unless ``pedantic=True``, which wraps either parser's output in the one
+feed gate, ``fail_on_feed_errors`` (the reference's ``--pedantic``).
 """
 
 from __future__ import annotations
@@ -32,9 +34,6 @@ from pyspark.sql import functions as F
 
 from ..functions.parse_expr import parse_expr_df
 from ..schemas import EVENT_COLUMN_NAMES
-
-# passthrough transcript columns carried beside the parsed struct
-PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
 
 # widest event-field set for which the expr parser is janino-safe: with a
 # narrow consumed set, predicate pushdown re-inlines only the consumed
@@ -80,23 +79,16 @@ def parse_transcripts(
       * ``auto``   — ``choose_parser(fields)``: expr for narrow field
         sets, arrow otherwise
 
-    ``pedantic=True`` (arrow parser only) makes the parse task itself raise
-    on the first malformed line — a ``--pedantic`` gate that NO downstream
-    plan rewrite (predicate pushdown, column pruning) can elide, because it
-    fires inside the Python worker before any result column exists.  The
-    expr parser relies on the column gate in ``fail_on_feed_errors``.
+    ``pedantic=True`` is the reference's ``--pedantic`` (app/src/main.rs:
+    84-85) for both parsers: the output is wrapped in
+    ``fail_on_feed_errors``, so the first malformed line fails the job with
+    ``LogParsingError``.  The gate reads ``parse_error_kind`` and
+    ``parse_error``, so a narrowed ``fields`` gains those two columns.
     """
     if parser == "auto":
         parser = choose_parser(fields)
-    if pedantic and parser != "arrow":
-        # never degrade a safety flag to a no-op: the in-task raise only
-        # exists on the arrow path; expr callers must gate via
-        # fail_on_feed_errors on the parsed columns (plans/pipeline.py does)
-        raise ValueError(
-            f"pedantic=True is enforced in-task only by parser='arrow' "
-            f"(got {parser!r}); wrap the result in fail_on_feed_errors "
-            "for the expression parser instead"
-        )
+    if pedantic and fields is not None:
+        fields = [*fields, "parse_error_kind", "parse_error"]
     # pass through every non-event column
     cols = [c for c in df.columns if c not in EVENT_COLUMN_NAMES]
     out_fields = (
@@ -105,8 +97,8 @@ def parse_transcripts(
         else [c for c in EVENT_COLUMN_NAMES if c == "event_type" or c in fields]
     )
     if parser == "expr":
-        return parse_expr_df(df.select(*cols)).select(*cols, *out_fields)
-    if parser == "arrow":
+        parsed = parse_expr_df(df.select(*cols)).select(*cols, *out_fields)
+    elif parser == "arrow":
         from pyspark.sql import types as T
 
         from ..functions.parse_arrow import make_map_in_arrow_fn
@@ -117,13 +109,16 @@ def parse_transcripts(
             [narrowed.schema[c] for c in cols]
             + [T.StructField(n, t, True) for n, t in EVENT_FIELDS if n in out_fields]
         )
-        return narrowed.mapInArrow(
-            make_map_in_arrow_fn(
-                cols, None if fields is None else out_fields, pedantic=pedantic
-            ),
+        parsed = narrowed.mapInArrow(
+            make_map_in_arrow_fn(cols, None if fields is None else out_fields),
             schema=out_schema,
         )
-    raise ValueError(f"unknown parser {parser!r} (want 'arrow', 'expr' or 'auto')")
+    else:
+        raise ValueError(
+            f"unknown parser {parser!r} (want 'arrow', 'expr' or 'auto')"
+        )
+    return fail_on_feed_errors(parsed) if pedantic else parsed
+
 
 def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     """Pedantic feed gate: abort the job on the FIRST in-band parse error.
@@ -138,7 +133,8 @@ def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     consumed by every downstream filter/groupBy, and predicate-pushdown
     SUBSTITUTES the gated expression into the pushed filter — so evaluating
     the filter on an error row fires the raise wherever the filter lands in
-    the plan.
+    the plan.  ``parse_transcripts(pedantic=True)`` applies it to either
+    parser's output; it is the package's only pedantic mechanism.
     """
     err = F.col("parse_error_kind").isNotNull()
 

@@ -181,9 +181,9 @@ def _build_unit_run(
 ):
     """Shared single-pass core: pending-unit filter -> parse -> sessionize
     (with per-unit observe metrics) -> summaries re-keyed by convhash.
-    Returns (summaries_df, observation).  ``pedantic=True`` makes the
-    (arrow) parse task raise on the first malformed line — the unit's
-    partition write then fails before committing anything.  ``ops``
+    Returns (summaries_df, observation).  ``pedantic=True`` wraps the
+    parse in the ``fail_on_feed_errors`` gate: the first malformed line
+    fails the unit's partition write before anything commits.  ``ops``
     selects the summary menu: order-insensitive menus take the one-pass
     vectorized aggregation (``summarize_multi``); a menu with
     ``player_resolutions`` takes the exact replay fold, whose grouped-map

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.parse import choose_parser, fail_on_feed_errors, parse_transcripts
+from ..operators.parse import choose_parser, parse_transcripts
 from ..operators.sessionize import sessionize
 from ..operators.summarize import (
     DEFAULT_EXTENDED_OPS,
@@ -52,8 +52,9 @@ def summarize_matches(
     tests/test_plans.py).
 
     ``stop_on_feed_errors=True`` is the reference's ``--pedantic`` feed
-    gate (app/src/main.rs:84-85): the job FAILS on the first malformed
-    line instead of routing it to the dead-letter column.
+    gate (app/src/main.rs:84-85): it passes ``pedantic=True`` to
+    ``parse_transcripts``, whose ``fail_on_feed_errors`` gate FAILS the
+    job on the first malformed line instead of keeping it in-band.
     """
     ops = frozenset(ops)
     unknown = ops - VALID_OPS
@@ -80,19 +81,6 @@ def summarize_matches(
     fold = "player_resolutions" in ops
     parser = choose_parser(FOLD_FIELDS if fold else agg_base)
 
-    # pedantic enforcement is parser-dependent (both are pushdown-proof,
-    # see operators.parse.fail_on_feed_errors for why turn_idx alone isn't):
-    #  * arrow  — raise INSIDE the parse task (pedantic=True below); no
-    #    error columns ever reach the plan
-    #  * expr   — raise_error gated into event_type + turn_idx, which
-    #    every downstream filter/groupBy consumes
-    pedantic_in_udf = stop_on_feed_errors and parser == "arrow"
-    gate_cols = stop_on_feed_errors and not pedantic_in_udf
-    error_fields = ["parse_error_kind", "parse_error"] if gate_cols else []
-
-    def _gate(parsed: DataFrame) -> DataFrame:
-        return fail_on_feed_errors(parsed) if gate_cols else parsed
-
     # summaries never read role/tool/ts — selecting the 3 needed columns
     # BEFORE the parse halves the Arrow IPC payload through the Python
     # boundary (mapInArrow is an optimizer barrier: Catalyst cannot prune
@@ -101,13 +89,11 @@ def summarize_matches(
     narrowed_in = transcripts.select("conv_id", "turn_idx", "text")
 
     if fold:
-        parsed = _gate(
-            parse_transcripts(
-                narrowed_in,
-                parser=parser,
-                fields=FOLD_FIELDS + error_fields,
-                pedantic=pedantic_in_udf,
-            )
+        parsed = parse_transcripts(
+            narrowed_in,
+            parser=parser,
+            fields=FOLD_FIELDS,
+            pedantic=stop_on_feed_errors,
         )
         # the arrow parser is a pushdown barrier, so the domain filter is
         # safe above it and trims ~40% of the rows the fold would
@@ -139,13 +125,11 @@ def summarize_matches(
     # dropped event types don't affect match state, and summarize filters
     # to Kill/Score rows above the window — no separate translate filter
     sessionized = sessionize(
-        _gate(
-            parse_transcripts(
-                narrowed_in,
-                parser=parser,
-                fields=agg_base + error_fields,
-                pedantic=pedantic_in_udf,
-            )
+        parse_transcripts(
+            narrowed_in,
+            parser=parser,
+            fields=agg_base,
+            pedantic=stop_on_feed_errors,
         )
     )
     # ONE two-level aggregation for every requested op (kills + means +

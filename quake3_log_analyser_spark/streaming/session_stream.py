@@ -152,96 +152,3 @@ def summarize_matches_stream(
         outputMode="append",
         timeoutConf="NoTimeout" if idle_timeout_ms is None else "ProcessingTimeTimeout",
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variant (Spark 4 stateful-processor API)
-# ---------------------------------------------------------------------------
-
-
-def summarize_matches_stream_tws(
-    transcripts_stream: DataFrame,
-    ops=DEFAULT_OPS,
-    stop_on_violations: bool = False,
-) -> DataFrame:
-    """Same streaming session assembly on the Spark 4 ``StatefulProcessor``
-    API (``transformWithStateInPandas``) — the successor to
-    ``applyInPandasWithState`` with composable typed state (ValueState) and
-    the RocksDB state store.  Shares the exact replay core and the JSON
-    state serialization with the legacy variant, so both are pinned by the
-    same batch-parity contract.
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider`` (transformWithState does not run on
-    the default HDFS-backed provider) AND a usable ``google.protobuf``
-    (the API's state-server protocol is protobuf-encoded; environments
-    without it — like this container — use the ``applyInPandasWithState``
-    variant above, which shares the identical replay core and state
-    serialization).  The parity test skips itself when protobuf is absent.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_columns = [f.name for f in MATCH_SUMMARY_SCHEMA]
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._session = handle.getValueState("session", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id = key[0]
-            prior = self._session.get()
-            if prior is not None:
-                state = _deserialize(prior[0])
-                max_turn = prior[1]
-            else:
-                state, max_turn = new_state(), -1
-
-            batches = [pdf for pdf in rows]
-            if not batches:
-                # an empty iterator (possible around timer/expiry ticks)
-                # must not crash the processor: keep state, emit nothing
-                self._session.update(_serialize(state, max_turn))
-                return
-            batch = pd.concat(batches) if len(batches) > 1 else batches[0]
-            batch = batch.sort_values("turn_idx")
-            batch = batch[batch["turn_idx"] > max_turn]  # at-least-once dedup
-            out = []
-            if len(batch):
-                max_turn = int(batch["turn_idx"].max())
-                events = zip(
-                    batch["turn_idx"].tolist(),
-                    [None if v is None or (isinstance(v, float) and pd.isna(v))
-                     else v for v in batch["event_type"].tolist()],
-                    batch["client_id"].tolist(),
-                    batch["name"].tolist(),
-                    batch["killer_id"].tolist(),
-                    batch["victim_id"].tolist(),
-                    batch["killer_name"].tolist(),
-                    batch["victim_name"].tolist(),
-                    batch["reason_name"].tolist(),
-                    batch["frags"].tolist(),
-                )
-                out = replay_events(state, conv_id, events, ops, stop_on_violations)
-
-            self._session.update(_serialize(state, max_turn))
-            if out:
-                yield pd.DataFrame(out, columns=out_columns)
-
-        def close(self) -> None:
-            pass
-
-    parsed = parse_transcripts(
-        transcripts_stream.select("conv_id", "turn_idx", "text"),
-        parser="arrow",
-        fields=[c for c in FOLD_COLS if c != "turn_idx"],
-    )
-    narrowed = parsed.select("conv_id", *FOLD_COLS)
-    return narrowed.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=MATCH_SUMMARY_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

@@ -249,8 +249,8 @@ def test_stop_on_feed_errors_passes_clean_input(spark):
 @pytest.mark.parametrize("ops", ["kills", "fold"])
 def test_stop_on_feed_errors_fires_on_both_plans(spark, ops):
     """The pedantic gate must fire on both op-menu plans: the kills-family
-    plan gates the expr parse's columns (fail_on_feed_errors), the fold
-    plan raises inside the arrow parse task.  A malformed line between two
+    plan gates the expr parse, the fold plan the arrow parse, both through
+    parse_transcripts(pedantic=True).  A malformed line between two
     delimiters must fail the job, not ride out as a dead-letter row."""
     from quake3_log_analyser_spark.plans.pipeline import (
         full_pipeline_ops,
@@ -268,6 +268,23 @@ def test_stop_on_feed_errors_fires_on_both_plans(spark, ops):
     assert summarize_matches(t, ops=menu).collect()  # permissive: completes
     with pytest.raises(Exception, match="LogParsingError"):
         summarize_matches(t, ops=menu, stop_on_feed_errors=True).collect()
+
+
+@pytest.mark.parametrize("fields", [None, ["killer_name"]], ids=["full", "narrow"])
+@pytest.mark.parametrize("parser", ["arrow", "expr"])
+def test_parse_pedantic_fails_on_malformed_line(spark, parser, fields):
+    """parse_transcripts(pedantic=True) is one gate for both parsers and
+    any field set: one malformed line fails the collect with
+    LogParsingError; the same parse without pedantic keeps it in-band."""
+    from quake3_log_analyser_spark.operators.parse import parse_transcripts
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    lines = [r" 0:00 InitGame: \fraglimit\20", " 0:01 garbage", " 0:02 ShutdownGame:"]
+    t = transcripts_from_lines(spark, lines, "c0")
+    rows = parse_transcripts(t, parser=parser, fields=fields).collect()
+    assert [r["event_type"] for r in rows] == ["InitGame", None, "ShutdownGame"]
+    with pytest.raises(Exception, match="LogParsingError"):
+        parse_transcripts(t, parser=parser, fields=fields, pedantic=True).collect()
 
 
 def test_render_conv_reports_validates_fold_columns(spark):

@@ -101,6 +101,34 @@ def test_checkpoint_idempotent_resume(spark, tmp_path):
     assert total == 1
 
 
+def test_run_resumable_pedantic_commits_nothing(spark, tmp_path):
+    """``run_resumable(pedantic=True)`` fails on one malformed line with
+    LogParsingError and commits no unit; the same input resumes
+    permissively."""
+    from quake3_log_analyser_spark.plans.checkpoint import (
+        committed_units,
+        run_resumable,
+    )
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    t = transcripts_from_lines(
+        spark,
+        [
+            r" 0:00 InitGame: \fraglimit\20",
+            " 0:01 ClientConnect: 2a",
+            " 0:02 Kill: 2 3 7: A killed B by MOD_ROCKET",
+            " 0:03 ShutdownGame:",
+        ],
+        "c0",
+    )
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="LogParsingError"):
+        run_resumable(spark, t, out, ckpt, run_id="r1", n_units=2, pedantic=True)
+    assert committed_units(spark, ckpt) == set()
+    assert len(run_resumable(spark, t, out, ckpt, run_id="r2", n_units=2)) == 2
+
+
 def test_resumable_run_is_single_pass(spark, tmp_path):
     """The whole resumable run — pending-unit filter, partitioned summaries
     write, per-unit observe metrics — must execute as ONE job with ONE

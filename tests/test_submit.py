@@ -6,8 +6,8 @@ packaged launch works the way the docstring claims: the package rides a
 session factory must NOT override it with its local[N] default — it did
 until session.py::_submitted_master), and the sinks + summaries land.
 
-Each test pays a fresh-JVM spark-submit (~40-60 s); kept to one happy
-path on a tiny input.
+Each test pays a fresh-JVM spark-submit (~40-60 s); kept to the happy
+path and the ``--pedantic`` failure, each on a tiny input.
 """
 
 from __future__ import annotations
@@ -25,14 +25,16 @@ REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 
-@pytest.mark.skipif(
+needs_submit = pytest.mark.skipif(
     not Path(SPARK_SUBMIT).exists(), reason="spark-submit not on PATH"
 )
-def test_spark_submit_honors_master_and_writes_sinks(spark, tmp_path):
+
+
+def _submit_job(spark, tmp_path, lines, *job_args):
+    """Write ``lines`` as one conversation, zip the package, and run
+    jobs/run_pipeline.py under spark-submit; returns (result, out_dir)."""
     rows = [
-        ("c1", 0, "system", r" 0:00 InitGame: \fraglimit\20\timelimit\15", None),
-        ("c1", 1, "game", " 0:01 Kill: 2 3 7: A killed B by MOD_ROCKET", None),
-        ("c1", 2, "system", " 0:02 ShutdownGame:", None),
+        ("c1", i, "system", line, None) for i, line in enumerate(lines)
     ]
     src = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
@@ -55,10 +57,23 @@ def test_spark_submit_honors_master_and_writes_sinks(spark, tmp_path):
             "--input", inp,
             "--output", str(out),
             "--checkpoint", str(tmp_path / "ck"),
-            "--ops", "kills",
-            "--run-id", "submit-test",
+            *job_args,
         ],
         cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+    return r, out
+
+
+@needs_submit
+def test_spark_submit_honors_master_and_writes_sinks(spark, tmp_path):
+    r, out = _submit_job(
+        spark, tmp_path,
+        [
+            r" 0:00 InitGame: \fraglimit\20\timelimit\15",
+            " 0:01 Kill: 2 3 7: A killed B by MOD_ROCKET",
+            " 0:02 ShutdownGame:",
+        ],
+        "--ops", "kills", "--run-id", "submit-test",
     )
     assert r.returncode == 0, r.stderr[-3000:]
     # the submitted master must govern the run — not session.py's default
@@ -67,3 +82,24 @@ def test_spark_submit_honors_master_and_writes_sinks(spark, tmp_path):
     assert (out / "sinks").is_dir() and (out / "match_summaries").is_dir()
     got = spark.read.parquet(str(out / "match_summaries")).collect()
     assert len(got) == 1 and got[0]["total_kills"] == 1
+
+
+@needs_submit
+def test_spark_submit_pedantic_fails_on_malformed_line(spark, tmp_path):
+    """``--pedantic`` with the full op menu: one malformed line fails the
+    job with ``LogParsingError`` before any sink or summary commits."""
+    r, out = _submit_job(
+        spark, tmp_path,
+        [
+            r" 0:00 InitGame: \fraglimit\20\timelimit\15",
+            " 0:01 ClientConnect: 2a",
+            " 0:02 Kill: 2 3 7: A killed B by MOD_ROCKET",
+            " 0:03 ShutdownGame:",
+        ],
+        "--ops", "kills,means_of_death,player_resolutions,reported_scores",
+        "--run-id", "submit-pedantic", "--pedantic",
+    )
+    assert r.returncode != 0, r.stdout[-2000:]
+    assert "LogParsingError" in r.stderr, r.stderr[-3000:]
+    assert not (out / "match_summaries" / "_SUCCESS").exists()
+    assert not (out / "sinks" / "_SUCCESS").exists()
